@@ -6,8 +6,10 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from tests.oracles import canonical8, clique_cycle, erdos_renyi, union_find_components
+from webgraph_rs_spark.driver import CheckpointStore
 from webgraph_rs_spark.graph import graph_from_pandas
 from webgraph_rs_spark.algorithms import (
     cc_star,
@@ -85,11 +87,11 @@ def test_chain_graph_star_converges_fast(spark):
 def test_cc_chain_tail_frontier_across_truncations(spark):
     """r6 single-action internals: the frontier is the ``_chg`` column of
     the driver-managed state (filtered view next round), which must stay
-    correct ACROSS lineage-truncation boundaries (truncate_every=3 —
-    rounds 3/6/9 hand back a LogicalRDD state whose ``_chg`` column the
-    next round filters). A chain graph keeps the frontier at O(1) nodes
-    for ~n rounds, crossing several truncations; labels must still equal
-    the union-find oracle and the public schema must stay (id, label)."""
+    correct ACROSS lineage-truncation boundaries (every round hands back
+    a LogicalRDD state whose ``_chg`` column the next round filters). A
+    chain graph keeps the frontier at O(1) nodes for ~n rounds, crossing
+    many truncations; labels must still equal the union-find oracle and
+    the public schema must stay (id, label)."""
     n = 12
     edges = [(i, i + 1) for i in range(n - 1)]  # directed chain 0->...->11
     g = graph_from_pandas(spark, edges, n)
@@ -120,4 +122,26 @@ def test_cc_resume_with_chg_state_schema(spark, tmp_path):
     assert (
         _labels_array(resumed.labels, n).tolist()
         == _labels_array(full.labels, n).tolist()
+    )
+    # the observe-mode metrics are resolved before the manifest line is
+    # appended, so no committed line carries empty metrics
+    lines = [m for m in CheckpointStore(ck, "cc").manifest() if m.get("complete")]
+    assert len(lines) == resumed.iterations
+    assert all("modified" in m["metrics"] for m in lines)
+
+
+def test_cc_resume_checkpoint_without_chg_column(spark, tmp_path):
+    """A checkpoint written before the ``_chg`` frontier column existed
+    holds only (id, label); resuming it must rescan in full and still
+    reach the union-find components."""
+    n, edges = erdos_renyi(60, 0.05, seed=11)
+    g = graph_from_pandas(spark, edges, n)
+    ck = str(tmp_path / "cc_old")
+    old_state = g.vertices.select("id", F.col("id").alias("label"))
+    CheckpointStore(ck, "cc").write(old_state, 1, {"modified": n}, 1.0)
+    resumed = connected_components(g, checkpoint_dir=ck, job="cc")
+    assert resumed.resumed_from == 1
+    assert (
+        _labels_array(resumed.labels, n).tolist()
+        == list(union_find_components(n, edges))
     )

@@ -35,6 +35,26 @@ def test_labelprop_matches_sync_oracle(spark, iters):
     assert (_labels_array(res.labels, n) == expected).all()
 
 
+def test_labelprop_resume_checkpoint_without_frontier_columns(spark, tmp_path):
+    """A checkpoint written before the ``_chg``/``_prop`` columns existed
+    holds only (id, label); the first round after a resume rescans in
+    full, so the resumed run still equals the synchronous oracle."""
+    from webgraph_rs_spark.driver import CheckpointStore
+
+    n, edges = erdos_renyi(60, 0.08, seed=4)
+    g = graph_from_pandas(spark, edges, n)
+    ck = str(tmp_path / "lp_old")
+    at2 = label_propagation_sync(n, edges, 2)
+    old_state = spark.createDataFrame(
+        [(i, int(lab)) for i, lab in enumerate(at2)], "id long, label long"
+    )
+    CheckpointStore(ck, "lp").write(old_state, 2, {"modified": n}, 1.0)
+    res = label_propagation(g, max_iter=5, checkpoint_dir=ck, job="lp")
+    assert res.resumed_from == 2
+    expected = label_propagation_sync(n, edges, 5)
+    assert (_labels_array(res.labels, n) == expected).all()
+
+
 def test_labelprop_two_cliques_communities(spark):
     # two 6-cliques joined by one edge -> two communities at convergence
     k = 6

@@ -174,6 +174,24 @@ def test_iterate_generic_counter(spark, tmp_ckpt):
     assert {r["v"] for r in res.state.collect()} == {5}
 
 
+def test_iterate_max_safety_exit_state_survives_cache_loss(spark):
+    """The max_safety_iter exit (a predicate that never fires) must hand
+    back a self-contained state: after every cache block is dropped the
+    returned state still recomputes instead of failing on a released
+    localCheckpoint block."""
+    from pyspark.sql import functions as F
+
+    state0 = spark.range(8).selectExpr("id", "cast(0 as long) as v")
+
+    def step(state, it):
+        return state.withColumn("v", F.col("v") + 1), {"modified": 1}
+
+    res = iterate(spark, state0, step, MetricZero("modified"), max_safety_iter=5)
+    assert res.iterations == 5
+    spark.catalog.clearCache()
+    assert res.state.agg(F.sum("v")).collect()[0][0] == 8 * 5
+
+
 def test_bfs_event_table(spark):
     """events=True materializes the reference's visit-event taxonomy
     (Init/Unknown/Known/FrontierSize, breadth_first/mod.rs:30-183) as a

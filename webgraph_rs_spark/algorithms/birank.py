@@ -143,11 +143,7 @@ def birank(
         else MetricBelow("l1_delta", threshold) | MaxIter(max_iter)
     )
     res = iterate(
-        spark, state0, step, stop, checkpoint_dir=checkpoint_dir, job=job,
-        # the alternating sweep embeds the state subplan ~3x per iteration
-        # (item pass, its reuse in the user pass, and the L1 join) — plans
-        # grow ~3^K between truncations, so keep K small (driver.py)
-        truncate_every=2,
+        spark, state0, step, stop, checkpoint_dir=checkpoint_dir, job=job
     )
     ur = res.state.filter(F.col("side") == "u").select("id", "rank")
     pr = res.state.filter(F.col("side") == "p").select("id", "rank")

@@ -92,6 +92,10 @@ def connected_components(
     fr_n: dict = {"n": None}  # last round's frontier size (observe metric)
 
     def step(state: DataFrame, it: int):
+        if "_chg" not in state.columns:
+            # resumed from a checkpoint written before the frontier column
+            # existed: rescan in full (exact — labels only decrease)
+            state = state.withColumn("_chg", F.lit(True))
         src_labels = state.filter(F.col("_chg")).select("id", "label")
         if fr_n["n"] is not None and fr_n["n"] <= 1_000_000:
             src_labels = F.broadcast(src_labels)
@@ -136,9 +140,6 @@ def connected_components(
         job=job,
         checkpoint_every=checkpoint_every,
         resume=resume,
-        # the step embeds the state subplan twice (frontier filter +
-        # adopt join) — plans grow ~2^K between truncations (driver.py)
-        truncate_every=3,
     )
     sym.unpersist()
     # drop the internal _chg column and hand back a self-contained frame:
@@ -241,10 +242,6 @@ def cc_star(
         job=job,
         checkpoint_every=1,
         resume=resume,
-        # the two-star composition embeds the state subplan ~4x per round
-        # (bi-direction union + min join, twice) — plans grow ~4^K between
-        # truncations, keep K minimal (driver.py)
-        truncate_every=2,
     )
     # star forest -> labels; nodes with no edges are their own component.
     parents = res.state.groupBy(F.col("src").alias("id")).agg(

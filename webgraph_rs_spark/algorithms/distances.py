@@ -849,7 +849,6 @@ def exact_sum_sweep(
     mode: str = "radius_diameter",
     batch: int = 32,
     max_pivots: int = 4096,
-    use_scc: bool | None = None,
     verbose: bool = False,
 ) -> SumSweepResult:
     """Exact forward eccentricities / radius / diameter over ALL nodes by
@@ -908,8 +907,7 @@ def exact_sum_sweep(
     modes — triangle-family bounds cannot certify an upper bound below
     d(v, pivot) + ecc(pivot), and the batch selector already makes the
     extremal nodes exact directly. The rules were removed rather than
-    shipped as dead weight (``use_scc`` is accepted and ignored for API
-    stability). Eccentricity-regular graphs (all ecc equal — no
+    shipped as dead weight. Eccentricity-regular graphs (all ecc equal — no
     extremal structure to exploit, the known SumSweep worst case)
     degrade gracefully to batched all-sources BFS and remain exact.
 
@@ -929,18 +927,6 @@ def exact_sum_sweep(
 
     if mode not in ("radius_diameter", "all", "all_forward"):
         raise ValueError(mode)
-    if use_scc is not None:
-        # Deprecated no-op: SCC-DAG tightening measured ZERO pivot
-        # reduction on 4 fixture families (r3 negative result) and was
-        # removed; the parameter remains one release for API stability.
-        import warnings
-
-        warnings.warn(
-            "exact_sum_sweep(use_scc=...) is deprecated and ignored "
-            "(measured no benefit; see docstring)",
-            DeprecationWarning,
-            stacklevel=2,
-        )
     spark = g.edges.sparkSession
     # self-loops never affect eccentricities (d(v,v) = 0) but would break
     # the fl = 1 init below — drop them up front

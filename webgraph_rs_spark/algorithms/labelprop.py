@@ -289,9 +289,6 @@ def label_propagation(
         job=job,
         checkpoint_every=checkpoint_every,
         resume=resume,
-        # the step embeds the state subplan twice (gather + adopt join),
-        # plus the volume/gain joins when enabled — keep ~2^K small
-        truncate_every=3 if (gamma == 0.0 and min_gain is None) else 2,
     )
     if own_edges:
         edges.unpersist()

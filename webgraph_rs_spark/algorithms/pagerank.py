@@ -21,9 +21,13 @@ scores agree well inside the 1e-6 acceptance band at convergence.
 
 Physical plan per iteration (the 100 TB cost model):
 
-1. gather join ``edges ⋈ scaled_ranks on src`` — both sides hash-partitioned on
-   the join key (edges persisted once, ranks land partitioned by id from the
-   previous groupBy), so the join is shuffle-free;
+1. gather join ``edges ⋈ scaled_ranks on src`` — the state arrives as the
+   driver's ``localCheckpoint`` product (unknown partitioning), so it is
+   hash-shuffled on id once for the 1/outdeg join against the cached meta
+   and once more for the L1-delta join; both are vertex-sized. The scaled
+   ranks leave that join partitioned by id = src and the edges are persisted
+   hash-partitioned by src, so the edge-sized gather join itself is
+   shuffle-free;
 2. ``groupBy(dst).sum`` — THE one unavoidable shuffle per iteration, with
    map-side partial aggregation; AQE skew handling + optional salting (see
    ``salt_partitions``) covers hub-domain skew;
@@ -271,9 +275,6 @@ def pagerank(
         job=job,
         checkpoint_every=checkpoint_every,
         resume=resume,
-        # state-reference multiplicity: 1 without the L1 delta join, 2 with
-        # it (plan grows ~2^K between truncations — see driver.py)
-        truncate_every=8 if threshold is None else 4,
     )
     err = res.metrics_history[-1].get("err", float("nan")) if res.metrics_history else 0.0
     meta.unpersist()

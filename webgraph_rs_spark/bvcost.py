@@ -325,14 +325,6 @@ def _pair_blocks(S, indptr, degs, ci, pi, M):
     return blk_vals, blk_seg, blk_pos, Cv[rest_mask], Cseg[rest_mask]
 
 
-def _seg_cost(vals, seg, nseg, len_fn):
-    if vals.size == 0:
-        return np.zeros(nseg, dtype=np.int64)
-    return np.bincount(
-        seg, weights=len_fn(vals).astype(np.float64), minlength=nseg
-    ).astype(np.int64)
-
-
 def _iv_res_cost(vals, seg, xv, nseg, min_len, len_int, len_res):
     """Cost-only twin of :func:`_iv_res_tokens` (skips token-position
     assembly — the cost matrix is the hot path). Same conventions; the

@@ -1134,39 +1134,6 @@ def int2nat(i: int) -> int:
     return (i << 1) if i >= 0 else (-i << 1) - 1
 
 
-def encode_successors(x: int, succs, w: BitWriter, zeta_k: int = 3) -> None:
-    """Append node ``x``'s list in window-0 / no-interval BV form:
-    gamma outdegree, then residuals only (first nat2int-relative to x,
-    rest as decremented gaps), all zeta_k — a valid BVGraph bitstream any
-    conforming reader accepts (``windowsize=0``, ``minintervallength=0``
-    are legal parameter choices of the format, mod.rs:38-45). Window 0
-    makes every list self-contained, which is exactly what lets encoding
-    parallelize with no cross-partition state."""
-    d = len(succs)
-    w.write_gamma(d)
-    if d == 0:
-        return
-    prev = int(succs[0])
-    w.write_zeta(int2nat(prev - x), zeta_k)
-    for s in succs[1:]:
-        s = int(s)
-        w.write_zeta(s - prev - 1, zeta_k)
-        prev = s
-
-
-def encode_range(lo: int, hi: int, groups: dict, zeta_k: int = 3):
-    """Encode nodes [lo, hi) (``groups``: node -> sorted successor list;
-    absent nodes are outdegree-0). Returns (payload bytes, total bits,
-    per-node bit sizes)."""
-    w = BitWriter()
-    sizes = []
-    for x in range(lo, hi):
-        before = w.bits
-        encode_successors(x, groups.get(x, ()), w, zeta_k)
-        sizes.append(w.bits - before)
-    return w.to_bytes(), w.bits, sizes
-
-
 # ---------------------------------------------- windowed (real) compression
 
 

@@ -8,11 +8,14 @@ has no checkpointing; its closest precedent is LLP persisting per-gamma label
 files and re-reading them (``algo/src/llp/mod.rs:202-215,449-461``). Here the
 loop is a first-class driver object that:
 
-- persists the vertex-state DataFrame every ``checkpoint_every`` iterations
-  as parquet (truncating Spark lineage — essential for iterative jobs, or the
-  plan grows unboundedly),
-- appends a manifest line per iteration with per-partition row counts +
-  metrics + wall time (the "per-partition lineage + metrics" contract),
+- ends every iteration with a lineage-free state: on a commit iteration
+  (every ``checkpoint_every`` with a durable store) the state is written as
+  parquet and re-read, otherwise it is ``localCheckpoint``-ed — Spark
+  iterative jobs must truncate lineage or the plan the driver re-analyses
+  grows every iteration,
+- appends a manifest line per committed iteration with per-partition row
+  counts + metrics + wall time (the "per-partition lineage + metrics"
+  contract),
 - resumes from the latest *complete* checkpoint after a kill: the manifest
   line is written only after the parquet commit, so a torn write is invisible
   and re-done.
@@ -135,14 +138,26 @@ class CheckpointStore:
     def state_path(self, iteration: int) -> str:
         return os.path.join(self.job_dir, f"iter={iteration:06d}")
 
-    def write(self, state: DataFrame, iteration: int, metrics: dict, wall_ms: float) -> DataFrame:
-        """Commit state for ``iteration``; returns the re-read (lineage-free) DF.
+    def write(
+        self,
+        state: DataFrame,
+        iteration: int,
+        metrics: dict | Callable[[], dict],
+        wall_ms: float,
+    ) -> tuple[DataFrame, dict]:
+        """Commit state for ``iteration``; returns the re-read (lineage-free)
+        DF and the resolved metrics.
 
-        The manifest line is appended only after the parquet write returns,
+        ``metrics`` may be a callable reading ``observe`` metrics attached
+        to ``state``: it is resolved after the parquet write (the action
+        that fills them) and before the manifest line is appended. The
+        manifest line is appended only after the parquet write returns,
         making it the completion marker for resume.
         """
         path = self.state_path(iteration)
         state.write.mode("overwrite").parquet(path)
+        if callable(metrics):
+            metrics = metrics()
         reread = state.sparkSession.read.parquet(path)
         # per-partition lineage: rows per partition of the committed state
         part_rows = {
@@ -163,31 +178,7 @@ class CheckpointStore:
         }
         with open(self.manifest_path, "a", encoding="utf-8") as f:
             f.write(json.dumps(line) + "\n")
-        return reread
-
-    def update_metrics(self, iteration: int, metrics: dict) -> None:
-        """Backfill the metrics of an already-committed iteration.
-
-        Observe-mode steps resolve their metrics only AFTER the
-        materializing action (i.e. after ``write`` already appended the
-        manifest line with ``{}``); without this backfill a resume would
-        see empty metrics for checkpoint-boundary iterations and a
-        metric-based stop check could never fire at resume time.
-        Rewrite-in-place via temp file + atomic rename.
-        """
-        entries = self.manifest()
-        changed = False
-        for m in entries:
-            if m.get("iteration") == iteration and m.get("complete"):
-                m["metrics"] = {k: _jsonable(v) for k, v in metrics.items()}
-                changed = True
-        if not changed:
-            return
-        tmp = self.manifest_path + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            for m in entries:
-                f.write(json.dumps(m) + "\n")
-        os.replace(tmp, self.manifest_path)
+        return reread, metrics
 
     def manifest(self) -> list[dict]:
         if not os.path.exists(self.manifest_path):
@@ -280,16 +271,16 @@ class IterationResult:
     resumed_from: int | None = None
 
 
-# Lineage is truncated every K iterations when no durable store is active.
-# K must respect the step's STATE-REFERENCE MULTIPLICITY r (how many times
-# step(state) embeds the state subplan): the logical tree grows like r^K
-# between truncations (plans are in-memory DAGs but Catalyst rules and plan
-# stringification expand them as trees), so r=1 steps tolerate large K while
-# an r=3 step at K=6 builds a ~3^6-subplan tree — enough to OOM the driver
-# building the AQE plan-change string. Callers with r > 1 pass an explicit
-# truncate_every (current values: pagerank 8 when threshold is None else 4,
-# connected_components 3, labelprop 3 or 2, birank 2, cc_star 2).
-DEFAULT_TRUNCATE_EVERY = 4
+def _truncate(df: DataFrame) -> DataFrame:
+    """Lineage-free copy of a persisted ``df``, released from the cache.
+
+    ONE action: the eager ``localCheckpoint`` executes through the cache
+    (populating it on the way, ~30x cheaper than letting it re-execute the
+    plan: 0.5 s vs 15 s on a 2M-row state) and resolves any attached
+    ``observe`` metrics."""
+    out = df.localCheckpoint(eager=True)
+    df.unpersist()
+    return out
 
 
 def iterate(
@@ -302,44 +293,35 @@ def iterate(
     checkpoint_every: int = 1,
     resume: bool = True,
     max_safety_iter: int = 10_000,
-    truncate_every: int | None = None,
 ) -> IterationResult:
     """Run ``state' = step(state)`` until ``stop`` fires.
 
     ``step(state, i)`` returns ``(new_state, metrics)``; metrics feed the
-    predicate (keys like ``l1_delta`` / ``modified``). Between checkpoints the
-    state is kept persisted in memory; every ``checkpoint_every`` iterations
-    it is committed to the store and re-read, truncating lineage. With
-    ``resume=True`` and an existing store, the loop continues from the latest
-    complete iteration — a killed job redoes at most ``checkpoint_every - 1``
-    iterations.
-
-    ``metrics`` may be a CALLABLE instead of a dict: it is invoked after the
-    loop's own materializing action, enabling single-action iterations via
+    predicate (keys like ``l1_delta`` / ``modified``). ``metrics`` may be a
+    CALLABLE instead of a dict: it is invoked after the loop's own
+    materializing action, enabling single-action iterations via
     ``DataFrame.observe`` — the step attaches observed aggregates to the
     state plan and the metrics ride along with the materialization instead
-    of costing a second pass. (With ``checkpoint_every > 1`` and a durable
-    store, a stop detected from observed metrics between checkpoints
-    triggers a late commit so the final state is always durable.)
+    of costing a second pass.
 
-    ``truncate_every`` — lineage-truncation interval when there is NO
-    durable store (default :data:`DEFAULT_TRUNCATE_EVERY`, floored by
-    ``checkpoint_every``). Between truncations the state lives in the
-    cache, which PRESERVES its hash partitioning, so the next iteration's
-    vertex-state joins stay exchange-free; a ``localCheckpoint`` boundary
-    (an AQE plan wrapped into a LogicalRDD) loses the partitioning and
-    forces a vertex-sized re-shuffle + one extra job per iteration —
-    measured as the dominant fixed cost of small/medium iterations. With a
-    durable store the commit cadence stays ``checkpoint_every`` (a commit
-    already truncates).
+    Every iteration ends with a self-contained state, and the previous
+    state is released at once. On a commit iteration (every
+    ``checkpoint_every`` iterations with a durable ``checkpoint_dir``) the
+    state is written to the store and re-read; otherwise it is truncated
+    with an eager ``localCheckpoint``. A step embeds the state plan more
+    than once (PageRank's 1/outdeg and L1-delta joins, CC's frontier filter
+    and adopt join), so any state kept as a cached plan across iterations
+    makes the driver re-analyse a tree that doubles per iteration; that
+    costs more than the vertex-sized re-shuffle the ``localCheckpoint``
+    boundary adds (it drops the state's hash partitioning).
+
+    With a durable store, a stop detected from observed metrics on a
+    non-commit iteration triggers a late commit, so the final state is
+    always durable. With ``resume=True`` and an existing store, the loop
+    continues from the latest complete iteration — a killed job redoes at
+    most ``checkpoint_every - 1`` iterations.
     """
     store = CheckpointStore(checkpoint_dir, job) if checkpoint_dir else None
-    if store is not None:
-        trunc = checkpoint_every
-    else:
-        trunc = truncate_every if truncate_every is not None else max(
-            checkpoint_every, DEFAULT_TRUNCATE_EVERY
-        )
     it = 0
     resumed_from = None
     metrics_history: list[dict] = []
@@ -360,103 +342,40 @@ def iterate(
                 return IterationResult(state, it, metrics_history, resumed_from)
 
     state = state.persist()
-    prev = None
-    # Truncation products (LogicalRDD / store re-reads) whose BLOCKS back
-    # the lineage of the persist-only states that follow them: between
-    # truncations a cached state's only recompute path roots at the last
-    # truncation product, so releasing that product per-iteration (the old
-    # policy) turned any lost cache block of a live state into an
-    # unrecoverable 'checkpoint block not found' failure. Their release is
-    # DEFERRED until the next truncation makes the live state
-    # self-contained again. Every stop path truncates the final state
-    # (do_ckpt on dict-metrics stops, the late-commit on observe-metrics
-    # stops), so the deferred list is always flushed by loop end except on
-    # the max_safety_iter valve, where leaking beats failing.
-    held_trunc: list[DataFrame] = []
-    prev_is_trunc = False
-    cur_is_trunc = False
     while it < max_safety_iter:
         t0 = time.monotonic()
         new_state, metrics = step(state, it)
         it += 1
         maybe_explain(new_state, f"{job}_iter{it:03d}")
-        metrics_fn = metrics if callable(metrics) else None
         new_state = new_state.persist()
-        new_is_trunc = False
-        do_ckpt = it % trunc == 0 or (
-            metrics_fn is None and stop.should_stop(it, metrics)
+        commit = store is not None and (
+            it % checkpoint_every == 0
+            or (not callable(metrics) and stop.should_stop(it, metrics))
         )
-
-        def _truncate(df: DataFrame) -> DataFrame:
-            # No durable store: still truncate lineage, or the logical plan
-            # (and driver stack at analysis time) grows without bound in
-            # iterative jobs. Materialize into the cache FIRST, then
-            # localCheckpoint — checkpointing from the cache is ~30x cheaper
-            # than letting localCheckpoint re-execute the plan itself
-            # (measured: 0.5s vs 15s on a 2M-row state).
-            unp = df
-            out = df.localCheckpoint(eager=True)
-            unp.unpersist()
-            return out
-
-        if store is not None and do_ckpt:
-            committed = store.write(
-                new_state, it, metrics if metrics_fn is None else {},
-                (time.monotonic() - t0) * 1000.0,
+        if commit:
+            committed, metrics = store.write(
+                new_state, it, metrics, (time.monotonic() - t0) * 1000.0
             )
             new_state.unpersist()
             new_state = committed.persist()
-            new_is_trunc = True
-        elif do_ckpt:
-            # ONE action: the eager localCheckpoint executes through the
-            # just-persisted cache (populating it on the way), truncates
-            # lineage, and — verified — resolves any attached observe
-            # metrics; a separate count() first would be a second job.
-            new_state = _truncate(new_state)
-            new_is_trunc = True
         else:
-            new_state.count()  # materialize before dropping the parent
-        if metrics_fn is not None:
-            # observed aggregates were collected by the materializing action
-            metrics = metrics_fn()
-            if store is not None and do_ckpt:
-                # the manifest line for this iteration was written with {}
-                # before the metrics resolved — backfill so resume sees them
-                store.update_metrics(it, metrics)
-            if not do_ckpt and stop.should_stop(it, metrics):
-                # late commit: the loop ends now, make the state durable
-                if store is not None:
-                    committed = store.write(
+            new_state = _truncate(new_state)
+            if callable(metrics):
+                metrics = metrics()
+                if store is not None and stop.should_stop(it, metrics):
+                    # late commit: the loop ends now, make the state durable
+                    committed, metrics = store.write(
                         new_state, it, metrics, (time.monotonic() - t0) * 1000.0
                     )
-                    new_state.unpersist()
+                    release_state(new_state)
                     new_state = committed.persist()
-                else:
-                    new_state = _truncate(new_state)
-                new_is_trunc = True
-        if prev is not None:
-            if prev_is_trunc:
-                held_trunc.append(prev)  # later states' lineage needs it
-            else:
-                release_state(prev)
-        prev, prev_is_trunc = state, cur_is_trunc
-        state, cur_is_trunc = new_state, new_is_trunc
-        if new_is_trunc:
-            # the live state is self-contained again — flush the deferred
-            # truncation products (prev is consumed and never recomputed)
-            for df in held_trunc:
-                release_state(df)
-            held_trunc.clear()
+        # metrics are resolved and new_state no longer depends on state
+        release_state(state)
+        state = new_state
         metrics = dict(
             metrics, iteration=it, wall_sec=round(time.monotonic() - t0, 3)
         )
         metrics_history.append(metrics)
         if stop.should_stop(it, metrics):
             break
-    if prev is not None:
-        release_state(prev)
-    if cur_is_trunc:
-        for df in held_trunc:
-            release_state(df)
-        held_trunc.clear()
     return IterationResult(state, it, metrics_history, resumed_from)

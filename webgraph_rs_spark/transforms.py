@@ -43,21 +43,6 @@ def symmetrize(g: LinkGraph, remove_loops: bool = True) -> LinkGraph:
     )
 
 
-def remove_self_loops(g: LinkGraph) -> LinkGraph:
-    """Reference: lazy ``NoSelfLoopsGraph`` (``graphs/no_selfloops_graph.rs:16``).
-
-    Catalyst keeps this lazy too — it is just a filter on the plan, pushed
-    down to the parquet scan when edges come straight from storage.
-    """
-    return LinkGraph(
-        g.edges.filter(F.col("src") != F.col("dst")), g.vertices,
-        _num_nodes=g._num_nodes,
-        # a filter preserves the parent's partitioning, so the canonical
-        # flag carries over (the cache does not — consumers re-persist)
-        src_layout=g.src_layout,
-    )
-
-
 def union_graphs(a: LinkGraph, b: LinkGraph, distinct: bool = True) -> LinkGraph:
     """Arc union of two graphs over the same vertex domain.
 
